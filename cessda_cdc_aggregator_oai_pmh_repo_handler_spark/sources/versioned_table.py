@@ -66,7 +66,11 @@ def versions(path: str) -> list[int]:
                   if n.startswith("v") and n.endswith(".json"))
 
 
-def _stage(df: DataFrame, path: str, version: int) -> list[str]:
+def _stage(df: DataFrame, path: str, version: int) -> dict[str, str]:
+    """Write ``df`` under a fresh stage directory and return the staged
+    files mapped to their md5, in file-name order. The checksums travel
+    with the commit attempt into ``_publish``; a lost race drops them
+    with the attempt."""
     stage_dir = os.path.join(path, "data", f"{version}-{uuid.uuid4().hex}")
     df.write.parquet(stage_dir)
     files = sorted(
@@ -76,14 +80,8 @@ def _stage(df: DataFrame, path: str, version: int) -> list[str]:
     # just-written files (one task per file) — the driver never re-reads
     # the staged bytes, so a wide compaction's commit cost stays O(files)
     # on the driver instead of O(bytes) (VERDICT r5 #3 / round-6 task 5)
-    _STAGED_CHECKSUMS.update(
-        _checksums_distributed(df.sparkSession, files))
-    return files
-
-
-# staged-file checksum cache: filled by _stage (distributed), drained by
-# _publish when it assembles the manifest. Driver-local, per-process.
-_STAGED_CHECKSUMS: dict[str, str] = {}
+    sums = _checksums_distributed(df.sparkSession, files)
+    return {f: sums[f] for f in files}
 
 
 def _md5_file(f: str) -> str:
@@ -296,9 +294,11 @@ def read_point(spark: SparkSession, path: str, column: str, value,
             len(m["files"]), len(keep))
 
 
-def _publish(path: str, manifest: dict, expected_parent: int) -> int:
+def _publish(path: str, manifest: dict, expected_parent: int,
+             staged: dict[str, str] | None = None) -> int:
     """Write the immutable manifest, then atomically swing the pointer —
-    refusing if another writer advanced it first.
+    refusing if another writer advanced it first. ``staged`` is this
+    attempt's ``_stage`` result (file → md5).
 
     Crash recovery (ADVICE r5): a writer that died between writing
     ``v{N}.json`` and the pointer swap must not wedge the table forever.
@@ -320,8 +320,7 @@ def _publish(path: str, manifest: dict, expected_parent: int) -> int:
     # integrity: checksum every newly staged file once (parent entries
     # carry over so a commit's cost stays proportional to what it wrote).
     # Staged files were checksummed in-cluster at write time (_stage);
-    # anything not covered (delete files staged before this change, old
-    # tables) falls back to the driver loop.
+    # anything not covered (old tables) falls back to the driver loop.
     parent = manifest.get("parent")
     pm = read_manifest(path, parent) if parent is not None else {}
     prior = pm.get("checksums", {})
@@ -329,8 +328,7 @@ def _publish(path: str, manifest: dict, expected_parent: int) -> int:
                                               {}).get("files", [])
     manifest["checksums"] = {
         **{f: c for f, c in prior.items() if f in listed},
-        **{f: _STAGED_CHECKSUMS.pop(f)
-           for f in listed if f in _STAGED_CHECKSUMS},
+        **{f: c for f, c in (staged or {}).items() if f in listed},
     }
     manifest["checksums"].update(
         _checksums([f for f in listed if f not in manifest["checksums"]]))
@@ -369,11 +367,12 @@ def _publish(path: str, manifest: dict, expected_parent: int) -> int:
 def create(df: DataFrame, path: str) -> int:
     """Initialize the table at version 0."""
     os.makedirs(path, exist_ok=True)
-    files = _stage(df, path, 0)
+    staged = _stage(df, path, 0)
     return _publish(path, {"version": 0, "parent": None, "op": "create",
-                           "files": files, "stats": _file_stats(files),
+                           "files": list(staged),
+                           "stats": _file_stats(staged),
                            "schema": df.schema.json()},
-                    expected_parent=0)
+                    expected_parent=0, staged=staged)
 
 
 def version_asof(path: str, ts: float) -> int:
@@ -463,15 +462,16 @@ def append(df: DataFrame, path: str,
     version = parent + 1
     prev = read_manifest(path, parent)
     _check_append_schema(df, prev)
-    files = _stage(df, path, version)
+    staged = _stage(df, path, version)
     return _publish(path, {"version": version, "parent": parent,
-                           "op": "append", "files": prev["files"] + files,
+                           "op": "append",
+                           "files": prev["files"] + list(staged),
                            "stats": {**prev.get("stats", {}),
-                                     **_file_stats(files)},
+                                     **_file_stats(staged)},
                            "blooms": prev.get("blooms", {}),
                            **({"delete_vectors": prev["delete_vectors"]}
                               if prev.get("delete_vectors") else {})},
-                    expected_parent=parent)
+                    expected_parent=parent, staged=staged)
 
 
 def append_evolve(df: DataFrame, path: str,
@@ -519,17 +519,17 @@ def append_evolve(df: DataFrame, path: str,
     evolved = T.StructType(
         list(base) + [f for f in df.schema.fields
                       if f.name not in declared])
-    files = _stage(df, path, version)
+    staged = _stage(df, path, version)
     return _publish(path, {"version": version, "parent": parent,
                            "op": "append_evolve",
-                           "files": prev["files"] + files,
+                           "files": prev["files"] + list(staged),
                            "stats": {**prev.get("stats", {}),
-                                     **_file_stats(files)},
+                                     **_file_stats(staged)},
                            "blooms": prev.get("blooms", {}),
                            "schema": evolved.json(),
                            **({"delete_vectors": prev["delete_vectors"]}
                               if prev.get("delete_vectors") else {})},
-                    expected_parent=parent)
+                    expected_parent=parent, staged=staged)
 
 
 def drop_column(path: str, column: str,
@@ -571,16 +571,16 @@ def overwrite(df: DataFrame, path: str,
     parent = current_version(path) if expected_version is None \
         else expected_version
     version = parent + 1
-    files = _stage(df, path, version)
+    staged = _stage(df, path, version)
     # a full overwrite replaces every data file, so it declares its own
     # schema and clears drop tombstones (no pre-drop file can resurrect)
     return _publish(path, {"version": version, "parent": parent,
-                           "op": "overwrite", "files": files,
-                           "stats": _file_stats(files),
+                           "op": "overwrite", "files": list(staged),
+                           "stats": _file_stats(staged),
                            "schema": df.schema.json(),
                            "dropped_columns": [],
                            **({"epoch": epoch} if epoch is not None else {})},
-                    expected_parent=parent)
+                    expected_parent=parent, staged=staged)
 
 
 def count_rows(path: str, version: int | None = None) -> int | None:
@@ -638,15 +638,16 @@ def delete_keys(spark: SparkSession, path: str, key_col: str,
     version = head + 1
     from pyspark.sql import functions as F
 
-    dfiles = _stage(keys.select(F.col(key_col).alias("k")).distinct(),
+    staged = _stage(keys.select(F.col(key_col).alias("k")).distinct(),
                     path, version)
     return _publish(path, {
         "version": version, "parent": head, "op": "delete",
         "files": prev["files"], "stats": prev.get("stats", {}),
         "blooms": prev.get("blooms", {}),
         "delete_vectors": {"key": key_col,
-                           "files": (pdv["files"] if pdv else []) + dfiles},
-    }, expected_parent=head)
+                           "files": ((pdv["files"] if pdv else [])
+                                     + list(staged))},
+    }, expected_parent=head, staged=staged)
 
 
 def append_batch_exactly_once(batch: DataFrame, path: str,
@@ -677,17 +678,17 @@ def append_batch_exactly_once(batch: DataFrame, path: str,
             except FileNotFoundError:
                 break  # vacuumed past here: older epochs are done epochs
     version = head + 1
-    files = _stage(batch, path, version)
+    staged = _stage(batch, path, version)
     prev = read_manifest(path, head)
     return _publish(path, {"version": version, "parent": head,
                            "op": "append", "epoch": epoch,
-                           "files": prev["files"] + files,
+                           "files": prev["files"] + list(staged),
                            "stats": {**prev.get("stats", {}),
-                                     **_file_stats(files)},
+                                     **_file_stats(staged)},
                            "blooms": prev.get("blooms", {}),
                            **({"delete_vectors": prev["delete_vectors"]}
                               if prev.get("delete_vectors") else {})},
-                    expected_parent=head)
+                    expected_parent=head, staged=staged)
 
 
 def start_append_stream(spark: SparkSession, source_dir: str, schema,
@@ -776,6 +777,13 @@ def merge_keys(spark: SparkSession, updates: DataFrame, path: str,
     covers, so merge I/O is batch-sized against a corpus-sized table
     (``merge``, by contrast, rewrites the whole snapshot every time).
 
+    Output sizing: the rewrite is written as many files as it removes
+    from the manifest (at least one), whatever the partitioning of
+    ``updates`` — so repeated merges never grow the file count. A first
+    load into an empty table therefore writes ONE file;
+    ``compact(target_files=…)`` re-splits it. An empty ``updates`` touches
+    nothing and stages no file (the version only records ``epoch``).
+
     Pending merge-on-read delete vectors are materialized into the
     rewritten files and carried for the untouched ones. ``epoch`` rides
     the manifest for exactly-once under foreachBatch replays (returns
@@ -793,14 +801,16 @@ def merge_keys(spark: SparkSession, updates: DataFrame, path: str,
         _check_append_schema(updates, m)
         stats = m.get("stats", {})
         bounds = updates.agg(
+            F.count(F.lit(1)).alias("n"),
             F.min(F.col(key)).alias("lo"),
             F.max(F.col(key)).alias("hi")).first()
         lo, hi = bounds["lo"], bounds["hi"]
         touched, untouched = [], []
         for f in m["files"]:
             zone = stats.get(f, {}).get(key)
-            if lo is None or zone is None or (zone[1] >= lo
-                                              and zone[0] <= hi):
+            # no non-null key in the batch: no current row can match
+            if lo is not None and (zone is None or (zone[1] >= lo
+                                                    and zone[0] <= hi)):
                 touched.append(f)  # overlap or no stats: must rewrite
             else:
                 untouched.append(f)
@@ -822,16 +832,18 @@ def merge_keys(spark: SparkSession, updates: DataFrame, path: str,
         else:
             out = updates
         version = head + 1
-        new_files = _stage(out, path, version)
+        staged = (_stage(out.coalesce(max(1, len(touched))), path, version)
+                  if touched or bounds["n"] else {})
         manifest = {
             "version": version, "parent": head, "op": "merge",
-            "files": untouched + new_files,
+            "files": untouched + list(staged),
             "stats": {**{f: s for f, s in stats.items() if f in untouched},
-                      **_file_stats(new_files)},
+                      **_file_stats(staged)},
             **({"epoch": epoch} if epoch is not None else {}),
         }
         try:
-            return _publish(path, manifest, expected_parent=head)
+            return _publish(path, manifest, expected_parent=head,
+                            staged=staged)
         except ConcurrentWriteError as e:
             last = e
     raise last
@@ -864,12 +876,13 @@ def compact_zorder(spark: SparkSession, path: str, col_a: str, col_b: str,
                  .sortWithinPartitions("__z")
                  .drop("__z"))
     version = head + 1
-    files = _stage(clustered, path, version)
+    staged = _stage(clustered, path, version)
     return _publish(path, {"version": version, "parent": head,
                            "op": "compact",
                            "cluster_by": f"zorder({col_a},{col_b})",
-                           "files": files, "stats": _file_stats(files)},
-                    expected_parent=head)
+                           "files": list(staged),
+                           "stats": _file_stats(staged)},
+                    expected_parent=head, staged=staged)
 
 
 def compact(spark: SparkSession, path: str, target_files: int = 1,
@@ -889,7 +902,7 @@ def compact(spark: SparkSession, path: str, target_files: int = 1,
     else:
         df = df.coalesce(target_files)
     version = head + 1
-    files = _stage(df, path, version)
+    staged = _stage(df, path, version)
     # a compaction materializes the whole snapshot, so (like overwrite) it
     # DECLARES the schema — this is also how a legacy table gains a
     # declaration — and clears drop tombstones: the rewrite read under the
@@ -897,10 +910,11 @@ def compact(spark: SparkSession, path: str, target_files: int = 1,
     # the name becomes safely reusable
     return _publish(path, {"version": version, "parent": head,
                            "op": "compact", "cluster_by": cluster_by,
-                           "files": files, "stats": _file_stats(files),
+                           "files": list(staged),
+                           "stats": _file_stats(staged),
                            "schema": df.schema.json(),
                            "dropped_columns": []},
-                    expected_parent=head)
+                    expected_parent=head, staged=staged)
 
 
 def table_changes(spark: SparkSession, path: str, v_from: int,

@@ -17,12 +17,14 @@ the serve-side semantics (P3 null-keeping ``$ne``, F9 deleted datestamp):
   aggregator's own hop and refreshes the denormalized ``direct_base_url``
   (/root/reference/CHANGELOG.md:117-120).
 
-Scale note: ``foreachBatch`` + Delta ``MERGE INTO`` partitioned by
-``direct_base_url`` is the production path (partition-pruned merge, no full
-rewrite). Delta isn't available in this container, so ``merge_batch``
-realizes identical semantics with an anti-join + union + atomic directory
-swap — correct at any scale but paying a full rewrite per batch; the merge
-logic itself is target-format agnostic.
+Scale note: ``foreachBatch`` + Delta ``MERGE INTO`` is the production
+shape. Without Delta, ``merge_batch_versioned`` realizes it over
+``sources.versioned_table``: each non-empty microbatch rewrites only the
+files whose key zone maps its keys overlap, into as many files as it
+replaces, and publishes one manifest version (no-data microbatches publish
+nothing). ``merge_batch`` (full rewrite + directory swap) and
+``merge_batch_bucketed`` (dynamic partition overwrite) are the older
+layouts ``start_ingest`` still drives.
 """
 
 from __future__ import annotations
@@ -233,11 +235,14 @@ def merge_batch_versioned(batch: DataFrame, table_path: str,
                           quarantine_path: str | None = None,
                           epoch_id: int | None = None) -> None:
     """MERGE sink over the VERSIONED TABLE (round-6 task: one publish
-    discipline, not two): each microbatch commits ONE snapshot version via
-    ``versioned_table.merge_keys`` — file-granular copy-on-write, so after
-    a key-clustered compact the merge rewrites only the files the batch's
-    key range touches. What the marker-file sinks above can't give, this
-    one does for free:
+    discipline, not two): each NON-EMPTY microbatch commits ONE snapshot
+    version via ``versioned_table.merge_keys`` — file-granular
+    copy-on-write, so after a key-clustered compact the merge rewrites
+    only the files the batch's key range touches. A microbatch with no
+    rows (the watermark's no-data batch every ``availableNow`` run ends
+    with) returns before the table is read and publishes nothing: it
+    applies no change, so a replay of it is a no-op too. What the
+    marker-file sinks above can't give, this one does for free:
 
     - exactly-once via the epoch riding the manifest's bounded
       recent-epoch set (vacuum-safe, no side-channel file);
@@ -251,20 +256,28 @@ def merge_batch_versioned(batch: DataFrame, table_path: str,
     spark = batch.sparkSession
     if epoch_id is not None and VT.epoch_committed(table_path, epoch_id):
         return
-    batch, bad = split_quarantine(batch)
-    if quarantine_path is not None and bad.limit(1).count() > 0:
-        bad.write.mode("append").parquet(quarantine_path)
-    latest = _latest_event_per_key(batch)
-    existing = VT.read(spark, table_path)
-    # cached: merge_keys takes three actions over the updates (key bounds,
-    # distinct keys, the rewrite) — without the cache each would replay
-    # the created-timestamp join against the corpus
-    incoming = _as_study_row(latest, existing).cache()
+    # one materialization of the microbatch: the emptiness test and every
+    # later action read it, so the stream's stateful dedup runs once
+    batch.persist()
     try:
-        VT.merge_keys(spark, incoming, table_path,
-                      key="aggregator_identifier", epoch=epoch_id)
+        if batch.count() == 0:
+            return
+        good, bad = split_quarantine(batch)
+        if quarantine_path is not None and bad.limit(1).count() > 0:
+            bad.write.mode("append").parquet(quarantine_path)
+        latest = _latest_event_per_key(good)
+        existing = VT.read(spark, table_path)
+        # cached: merge_keys takes three actions over the updates (key
+        # bounds, distinct keys, the rewrite) — without the cache each
+        # would replay the created-timestamp join against the corpus
+        incoming = _as_study_row(latest, existing).cache()
+        try:
+            VT.merge_keys(spark, incoming, table_path,
+                          key="aggregator_identifier", epoch=epoch_id)
+        finally:
+            incoming.unpersist()
     finally:
-        incoming.unpersist()
+        batch.unpersist()
 
 
 # /metrics live-record flag as a self-maintainable measure: the pair
@@ -298,13 +311,14 @@ def refresh_metrics_view(spark: SparkSession, table_path: str,
 
 def metrics_view_counts(state: dict) -> dict:
     """State → the reference's /metrics shape: per-publisher totals and
-    without-deleted counts (metrics.py's collect_metrics contract)."""
+    without-deleted counts (metrics.py's collect_metrics contract, which
+    reports no per-publisher gauge for records without a publisher)."""
+    rows = {k: v for k, v in state["rows"].items() if k is not None}
     return {
         "version": state["version"],
-        "publishers_counts": {k: int(n) for k, (n, _s) in
-                              state["rows"].items()},
+        "publishers_counts": {k: int(n) for k, (n, _s) in rows.items()},
         "publishers_counts_without_deleted": {
-            k: int(s) for k, (_n, s) in state["rows"].items()},
+            k: int(s) for k, (_n, s) in rows.items()},
     }
 
 
@@ -313,7 +327,9 @@ def _load_view_state(path: str) -> dict | None:
 
     try:
         with open(path) as f:
-            return json.load(f)
+            raw = json.load(f)
+        return {"version": raw["version"],
+                "rows": {k: [n, s] for k, n, s in raw["rows"]}}
     except (OSError, ValueError):
         return None
 
@@ -321,9 +337,13 @@ def _load_view_state(path: str) -> dict | None:
 def _store_view_state(path: str, state: dict) -> None:
     import json
 
+    # rows as [group, count, sum] triples: a JSON object cannot key on
+    # the null group (records without a publisher)
+    raw = {"version": state["version"],
+           "rows": [[k, n, s] for k, (n, s) in state["rows"].items()]}
     tmp = f"{path}.{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as f:
-        json.dump(state, f)
+        json.dump(raw, f)
     os.replace(tmp, path)  # same atomic-publish discipline as the table
 
 

@@ -1002,3 +1002,128 @@ def test_bowker_terms_derivable_from_streaming_transition_counts(
     want = {(r["i"], r["j"]): (r["n_ij"], r["n_ji"], r["chi_term"])
             for r in arrays.q_bowker_symmetry(spark, sf_dir).collect()}
     assert got == want
+
+
+def _versioned_ingest(spark, tmp_path):
+    """(land, run, table): landing dir + checkpoint + maintained /metrics
+    view around one ``start_ingest_versioned`` table."""
+    src = str(tmp_path / "incoming")
+    table = str(tmp_path / "vt_corpus")
+    os.makedirs(src, exist_ok=True)
+
+    def land(events):
+        _events_df(spark, events).coalesce(1).write.mode("append").parquet(src)
+
+    def run():
+        q = I.start_ingest_versioned(
+            spark, src, table, str(tmp_path / "ckpt"),
+            metrics_view_path=str(tmp_path / "view.json"))
+        q.awaitTermination(120)
+        return q.recentProgress
+
+    return land, run, table
+
+
+def _corpus_state(spark, table):
+    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import (
+        versioned_table as VT,
+    )
+
+    rows = VT.read(spark, table).select(
+        "aggregator_identifier", "study_number", "metadata.status").collect()
+    assert len(rows) == len({r[0] for r in rows})  # one row per key
+    return {r[0]: (r[1], r[2]) for r in rows}
+
+
+def _assert_view_matches_corpus(spark, tmp_path, table):
+    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators.metrics import (
+        compute_metrics,
+    )
+    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import (
+        versioned_table as VT,
+    )
+
+    view = I.metrics_view_counts(
+        I._load_view_state(str(tmp_path / "view.json")))
+    direct = compute_metrics(VT.read(spark, table))
+    assert view["version"] == VT.current_version(table)
+    assert view["publishers_counts"] == direct["publishers_counts"]
+    assert (view["publishers_counts_without_deleted"]
+            == direct["publishers_counts_without_deleted"])
+
+
+def test_versioned_ingest_no_data_batch_publishes_nothing(spark, tmp_path):
+    """Each availableNow run ends with the watermark's no-data microbatch:
+    it must not publish a version, a rerun with nothing landed publishes
+    none, and a restart that re-runs the no-data epoch applies nothing."""
+    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import (
+        versioned_table as VT,
+    )
+
+    land, run, table = _versioned_ingest(spark, tmp_path)
+    recs = fixture_records()
+    land([_event(r, "upsert", "2020-01-01T00:00:00Z") for r in recs[:5]])
+    progress = run()
+    assert [p["numInputRows"] for p in progress] == [5, 0]  # data, no-data
+    assert VT.versions(table) == [0, 1]  # empty create + ONE merge
+    assert VT.read_manifest(table, 1)["epoch"] == progress[0]["batchId"]
+    model = {r["aggregator_identifier"]: (r["study_number"], "created")
+             for r in recs[:5]}
+    assert _corpus_state(spark, table) == model
+
+    run()  # nothing new landed
+    assert VT.versions(table) == [0, 1]
+
+    # crash after the no-data epoch's sink ran, before its commit: the
+    # restart re-runs that epoch, which still applies nothing
+    commits = tmp_path / "ckpt" / "commits"
+    no_data = progress[-1]["batchId"]
+    for name in (str(no_data), f".{no_data}.crc"):
+        os.remove(str(commits / name))
+    run()
+    assert VT.versions(table) == [0, 1]
+    assert _corpus_state(spark, table) == model
+
+    # the next data batch after the restart applies exactly once
+    land([_event(dict(recs[1], study_number="revised"), "upsert",
+                 "2020-02-01T00:00:00Z"),
+          _event(recs[2], "delete", "2020-02-01T00:00:00Z"),
+          _event(recs[5], "upsert", "2020-02-01T00:00:00Z")])
+    progress = run()
+    assert [p["numInputRows"] for p in progress][0] == 3
+    assert VT.versions(table) == [0, 1, 2]
+    model[recs[1]["aggregator_identifier"]] = ("revised", "created")
+    model[recs[2]["aggregator_identifier"]] = (
+        recs[2]["study_number"], "deleted")
+    model[recs[5]["aggregator_identifier"]] = (
+        recs[5]["study_number"], "created")
+    assert _corpus_state(spark, table) == model
+    _assert_view_matches_corpus(spark, tmp_path, table)
+
+
+def test_merge_batch_versioned_empty_batch_fresh_epoch_is_noop(spark,
+                                                               tmp_path):
+    """An empty microbatch with an epoch the table has never seen leaves
+    the pointer and the head manifest byte-identical."""
+    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import (
+        versioned_table as VT,
+    )
+
+    table = str(tmp_path / "vt_corpus")
+    VT.create(spark.createDataFrame([], studies_schema()), table)
+    recs = fixture_records()
+    I.merge_batch_versioned(
+        _events_df(spark, [_event(r, "upsert", "2020-01-01T00:00:00Z")
+                           for r in recs[:3]]), table, epoch_id=0)
+
+    def snapshot():
+        with open(os.path.join(table, "_VERSION")) as f:
+            pointer = f.read()
+        with open(os.path.join(table, "_manifests",
+                               f"v{int(pointer)}.json")) as f:
+            return pointer, f.read(), VT.versions(table)
+
+    before = snapshot()
+    I.merge_batch_versioned(_events_df(spark, []), table, epoch_id=7)
+    assert snapshot() == before
+    assert not VT.epoch_committed(table, 7)

@@ -638,3 +638,93 @@ def test_history_and_files_metadata_tables(spark, table):
         assert r["bytes"] and r["bytes"] > 0
         assert r["md5"] and len(r["md5"]) == 32
         assert r["zone_maps"] is not None
+
+
+def test_merge_keys_keeps_one_file_table_at_one_file(spark, tmp_path):
+    """Each merge writes as many files as it replaces: successive merges
+    of many-partition batches over the whole key range leave a 1-file
+    table at 1 file, with exactly the rows of a Python model."""
+    import random
+
+    path = str(tmp_path / "tbl")
+    VT.create(spark.range(40).select(
+        F.col("id"), F.lit("v0").alias("tag")).coalesce(1), path)
+    model = {i: "v0" for i in range(40)}
+    rng = random.Random(7)
+    for n in range(1, 5):
+        keys = rng.sample(range(40 + 5 * n), 12)  # old and new keys
+        upd = spark.createDataFrame([(k, f"v{n}") for k in keys],
+                                    "id long, tag string").repartition(8)
+        VT.merge_keys(spark, upd, path, key="id")
+        model.update({k: f"v{n}" for k in keys})
+        assert len(VT.read_manifest(path, VT.current_version(path))
+                   ["files"]) == 1
+        rows = VT.read(spark, path).collect()
+        assert sorted((r["id"], r["tag"]) for r in rows) == \
+            sorted(model.items())
+
+
+def test_merge_keys_carries_untouched_clustered_files(spark, tmp_path):
+    """On a range-clustered table a merge rewrites only the file its keys
+    fall in, into one file; the others stay listed by reference with
+    their recorded checksums."""
+    path = str(tmp_path / "tbl")
+    VT.create(spark.range(40).select(F.col("id"), F.lit("v0").alias("tag")),
+              path)
+    VT.compact(spark, path, target_files=4, cluster_by="id")
+    parent = VT.read_manifest(path, VT.current_version(path))
+    assert len(parent["files"]) == 4
+    lo, hi = min(parent["stats"][f]["id"] for f in parent["files"])
+    keys = sorted({lo, hi})
+    upd = spark.createDataFrame([(k, "new") for k in keys],
+                                "id long, tag string").repartition(4)
+    VT.merge_keys(spark, upd, path, key="id")
+    head = VT.read_manifest(path, VT.current_version(path))
+    carried = set(parent["files"]) & set(head["files"])
+    assert len(carried) == 3 and len(head["files"]) == 4
+    assert all(head["checksums"][f] == parent["checksums"][f]
+               for f in carried)
+    rows = {r["id"]: r["tag"] for r in VT.read(spark, path).collect()}
+    assert rows == {i: ("new" if i in keys else "v0") for i in range(40)}
+
+
+def test_lost_race_retains_no_staged_checksums(spark, table, monkeypatch):
+    """A merge attempt that loses the publish race to a concurrent commit
+    retries; nothing of the losing attempt's staging stays in the
+    process or in the winning manifest."""
+    real_stage = VT._stage
+    lost: list[dict] = []
+
+    def racing_stage(df, path, version):
+        staged = real_stage(df, path, version)
+        if not lost:
+            lost.append(staged)
+            # a rival commits after this attempt read the head
+            VT.append(spark.range(100, 101).select(
+                F.col("id"), F.lit("rival").alias("tag")), path)
+        return staged
+
+    monkeypatch.setattr(VT, "_stage", racing_stage)
+    upd = spark.range(2, 4).select(F.col("id"), F.lit("merged").alias("tag"))
+    assert VT.merge_keys(spark, upd, table, key="id") == 2  # v1 = rival
+    loser = set(lost[0])
+    head = VT.read_manifest(table, 2)
+    assert not loser & set(head["files"])
+    assert not loser & set(head["checksums"])
+    for name, value in vars(VT).items():
+        if isinstance(value, (dict, set)):
+            assert not loser & set(value), name
+    rows = {(r["id"], r["tag"]) for r in VT.read(spark, table).collect()}
+    assert rows == {(0, "v0"), (1, "v0"), (2, "merged"), (3, "merged"),
+                    (4, "v0"), (100, "rival")}
+
+
+def test_merge_keys_empty_updates_stage_nothing(spark, table):
+    """An empty update set can match no row: the merge records its epoch
+    and lists exactly the parent's files, staging none."""
+    parent = VT.read_manifest(table, 0)
+    empty = spark.range(0).select(F.col("id"), F.lit("x").alias("tag"))
+    assert VT.merge_keys(spark, empty, table, key="id", epoch=5) == 1
+    assert VT.read_manifest(table, 1)["files"] == parent["files"]
+    assert VT.epoch_committed(table, 5)
+    assert VT.read(spark, table).count() == 5
