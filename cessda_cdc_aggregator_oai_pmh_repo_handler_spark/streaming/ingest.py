@@ -5,8 +5,10 @@ BASELINE.json puts ingestion in scope: an upsert stream of Study documents
 keyed by ``aggregator_identifier`` with logical-delete tombstones matching
 the serve-side semantics (P3 null-keeping ``$ne``, F9 deleted datestamp):
 
-- **dedup**: watermark on ``harvest_ts`` + ``dropDuplicates`` on
-  (identifier, harvest_ts) absorbs duplicate harvest deliveries;
+- **dedup**: newer harvest wins, in the merge: an event applies only if
+  its ``harvest_ts`` is later than the corpus row's ``metadata.updated``,
+  so a redelivered event or an older one arriving late changes nothing,
+  in any later run, and the stream keeps no state store;
 - **upsert**: last event per key wins within a batch; ``metadata.updated``
   is maintained at ingest — this is exactly what makes the serve side's
   snapshot paging (P7/O2) correct;
@@ -21,8 +23,8 @@ Scale note: ``foreachBatch`` + Delta ``MERGE INTO`` is the production
 shape. Without Delta, ``merge_batch_versioned`` realizes it over
 ``sources.versioned_table``: each non-empty microbatch rewrites only the
 files whose key zone maps its keys overlap, into as many files as it
-replaces, and publishes one manifest version (no-data microbatches publish
-nothing). ``merge_batch`` (full rewrite + directory swap) and
+replaces, and publishes one manifest version (an empty microbatch
+publishes nothing). ``merge_batch`` (full rewrite + directory swap) and
 ``merge_batch_bucketed`` (dynamic partition overwrite) are the older
 layouts ``start_ingest`` still drives.
 """
@@ -68,12 +70,21 @@ def _latest_event_per_key(events: DataFrame) -> DataFrame:
 
 def _as_study_row(events: DataFrame, existing: DataFrame) -> DataFrame:
     """Shape events into studies-schema rows, merging per-key state from
-    ``existing`` (created timestamp, prior fields for tombstones)."""
+    ``existing`` (created timestamp, prior fields for tombstones).
+
+    Newer harvest wins: an event whose ``harvest_ts`` is not later than
+    the corpus row's ``metadata.updated`` yields no row, so the sinks
+    leave that row as it is. A redelivered event (same key and
+    ``harvest_ts``) or an older one arriving late is absorbed here, in
+    any later run, with no streaming state."""
     ex = existing.select(
         F.col("aggregator_identifier").alias("_ex_id"),
         F.col("metadata").alias("_ex_metadata"),
     )
-    joined = events.join(ex, events.aggregator_identifier == ex._ex_id, "left")
+    ex_updated = F.col("_ex_metadata.updated")
+    joined = events.join(
+        ex, events.aggregator_identifier == ex._ex_id, "left"
+    ).filter(ex_updated.isNull() | (F.col("harvest_ts") > ex_updated))
 
     created = F.coalesce(F.col("_ex_metadata.created"), F.col("harvest_ts"))
     is_delete = F.col("action") == ACTION_DELETE
@@ -238,10 +249,12 @@ def merge_batch_versioned(batch: DataFrame, table_path: str,
     discipline, not two): each NON-EMPTY microbatch commits ONE snapshot
     version via ``versioned_table.merge_keys`` — file-granular
     copy-on-write, so after a key-clustered compact the merge rewrites
-    only the files the batch's key range touches. A microbatch with no
-    rows (the watermark's no-data batch every ``availableNow`` run ends
-    with) returns before the table is read and publishes nothing: it
-    applies no change, so a replay of it is a no-op too. What the
+    only the files the batch's key range touches. The harvest stream is
+    stateless, so an ``availableNow`` run has no no-data batch; a
+    microbatch with no rows still returns before the table is read and
+    publishes nothing: it applies no change, so a replay of it is a no-op
+    too. A batch whose events are all stale (see ``_as_study_row``)
+    rewrites no file; its version only records the epoch. What the
     marker-file sinks above can't give, this one does for free:
 
     - exactly-once via the epoch riding the manifest's bounded
@@ -257,7 +270,7 @@ def merge_batch_versioned(batch: DataFrame, table_path: str,
     if epoch_id is not None and VT.epoch_committed(table_path, epoch_id):
         return
     # one materialization of the microbatch: the emptiness test and every
-    # later action read it, so the stream's stateful dedup runs once
+    # later action read it, so the landed files are scanned once
     batch.persist()
     try:
         if batch.count() == 0:
@@ -267,9 +280,9 @@ def merge_batch_versioned(batch: DataFrame, table_path: str,
             bad.write.mode("append").parquet(quarantine_path)
         latest = _latest_event_per_key(good)
         existing = VT.read(spark, table_path)
-        # cached: merge_keys takes three actions over the updates (key
-        # bounds, distinct keys, the rewrite) — without the cache each
-        # would replay the created-timestamp join against the corpus
+        # cached: merge_keys takes two actions over the updates (the key
+        # bounds and the rewrite; its distinct-keys step is lazy) —
+        # without the cache each would replay the join against the corpus
         incoming = _as_study_row(latest, existing).cache()
         try:
             VT.merge_keys(spark, incoming, table_path,
@@ -347,9 +360,31 @@ def _store_view_state(path: str, state: dict) -> None:
     os.replace(tmp, path)  # same atomic-publish discipline as the table
 
 
+def _harvest_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """The landed harvest files as a stream. Stateless: dedup is the
+    merge's newer-harvest-wins rule (``_as_study_row``), so the query
+    holds no state store and an ``availableNow`` run has no no-data
+    batch."""
+    return (spark.readStream.schema(harvest_event_schema())
+            .option("maxFilesPerTrigger", 16).parquet(source_dir))
+
+
+def _start_merge_query(stream: DataFrame, sink, checkpoint_dir: str,
+                       available_now: bool):
+    # a checkpoint written by the earlier stateful dedup query
+    # (watermark + dropDuplicates) keeps its dedup set under state/; the
+    # merge rule replaces that set, and the stateless plan fails its next
+    # batch while it is there
+    shutil.rmtree(os.path.join(checkpoint_dir, "state"), ignore_errors=True)
+    writer = (stream.writeStream.foreachBatch(sink)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def start_ingest_versioned(spark: SparkSession, source_dir: str,
                            table_path: str, checkpoint_dir: str,
-                           watermark: str = "1 hour",
                            available_now: bool = True,
                            metrics_view_path: str | None = None):
     """``start_ingest`` with the versioned table as the corpus store.
@@ -370,21 +405,8 @@ def start_ingest_versioned(spark: SparkSession, source_dir: str,
             _store_view_state(metrics_view_path,
                               refresh_metrics_view(spark, table_path, state))
 
-    stream = (
-        spark.readStream.schema(harvest_event_schema())
-        .option("maxFilesPerTrigger", 16)
-        .parquet(source_dir)
-        .withWatermark("harvest_ts", watermark)
-        .dropDuplicates(["aggregator_identifier", "harvest_ts"])
-    )
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_merge_query(_harvest_stream(spark, source_dir), _sink,
+                              checkpoint_dir, available_now)
 
 
 def read_bucketed_corpus(spark: SparkSession, target_path: str) -> DataFrame:
@@ -394,32 +416,20 @@ def read_bucketed_corpus(spark: SparkSession, target_path: str) -> DataFrame:
 
 
 def start_ingest(spark: SparkSession, source_dir: str, target_path: str,
-                 checkpoint_dir: str, watermark: str = "1 hour",
-                 available_now: bool = True, bucketed: bool = True):
-    """File-source harvest stream → watermarked dedup → merge sink.
+                 checkpoint_dir: str, available_now: bool = True,
+                 bucketed: bool = True):
+    """File-source harvest stream → upsert/tombstone merge sink (dedup is
+    the merge's newer-harvest-wins rule).
 
     ``available_now=True`` drains what's present and stops (test/batch-up
     mode); ``False`` runs continuously with the default trigger. The sink is
     the partition-pruned bucketed merge by default — batch-sized I/O per
     microbatch; pass ``bucketed=False`` for the flat full-rewrite layout."""
     merge = merge_batch_bucketed if bucketed else merge_batch
-    stream = (
-        spark.readStream.schema(harvest_event_schema())
-        .option("maxFilesPerTrigger", 16)
-        .parquet(source_dir)
-        .withWatermark("harvest_ts", watermark)
-        .dropDuplicates(["aggregator_identifier", "harvest_ts"])
-    )
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, epoch: merge(df, target_path, epoch_id=epoch)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_merge_query(
+        _harvest_stream(spark, source_dir),
+        lambda df, epoch: merge(df, target_path, epoch_id=epoch),
+        checkpoint_dir, available_now)
 
 
 def streaming_user_running_totals(spark: SparkSession, source_dir: str,
@@ -527,7 +537,7 @@ def streaming_pattern_counts(spark: SparkSession, source_dir: str,
     Ordering contract: rows are processed in (ts, event_id) order within
     each batch, and batches must arrive in event-time order per key (the
     file source's list order; a production deployment fronts this with
-    the watermarked dedup stage like start_ingest does). The test pins
+    a watermarked dedup stage). The test pins
     stream-final counts to the oracle-checked batch operator."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout

@@ -8,8 +8,8 @@ carries ONLY verb + resumptionToken), parse each page with
 ``harvester.parse_list_records``, and land the events as parquet batches in
 the directory ``ingest.start_ingest``'s file stream reads. The poller is a
 tiny driver-side loop — pages are bounded by the endpoint's list size — and
-everything heavy (watermark dedup, upsert/tombstone merge) happens in the
-stream behind it.
+everything heavy (the newer-harvest-wins upsert/tombstone merge) happens in
+the stream behind it.
 
 Scale shape: one poller per source endpoint, each writing page-sized
 parquet files into a shared landing directory; the single ingest stream
@@ -145,7 +145,7 @@ def harvest_endpoint_to_corpus(spark: SparkSession, base_url: str,
                                harvest_ts: datetime.datetime | None = None,
                                poller: OAIPMHPoller | None = None) -> str:
     """Convenience end-to-end: poll ``base_url`` to exhaustion, stream the
-    landed events through the watermarked ingest merge, return the corpus
+    landed events through the ingest merge, return the corpus
     path. ``work_dir`` holds the landing/checkpoint/corpus directories."""
     from ..sources.studies import studies_schema
     from .ingest import start_ingest

@@ -5,7 +5,7 @@ Spark's rate source provides the unbounded driver; a pure-Column transform
 turns each (timestamp, value) row into a deterministic harvest event —
 rotating publishers, multilingual titles, periodic re-harvests of earlier
 identifiers (upserts) and periodic deletes — so the full ingest pipeline
-(watermark dedup → merge → tombstones) runs continuously without any
+(newer-harvest-wins merge → tombstones) runs continuously without any
 external endpoint. Swapping the rate source for a real OAI-PMH poller
 changes only this module; the event schema and merge are identical
 (``harvester.parse_list_records`` produces the same rows from real XML).

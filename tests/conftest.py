@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, so a copy of the repo tests its own package
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.session import build_session
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import urllib.request
 import xml.etree.ElementTree as ET
+from pathlib import Path
 
 import pytest
 
@@ -15,7 +16,7 @@ from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import yaml_sets
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import fixture_studies
 
 NS = {"oai": "http://www.openarchives.org/OAI/2.0/"}
-DATA = "/root/repo/tests/data"
+DATA = str(Path(__file__).resolve().parent / "data")
 
 
 @pytest.fixture(scope="module")

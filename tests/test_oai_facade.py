@@ -4,6 +4,7 @@ ElementTree-level assertions (/root/reference/tests/test_serve.py)."""
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
+from pathlib import Path
 
 import pytest
 
@@ -12,7 +13,7 @@ from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.plans.query_builder import
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import yaml_sets
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import fixture_studies
 
-DATA = "/root/repo/tests/data"
+DATA = str(Path(__file__).resolve().parent / "data")
 NOW = "2019-12-12 07:14:38"
 NS = {
     "oai": "http://www.openarchives.org/OAI/2.0/",

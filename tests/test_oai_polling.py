@@ -1,6 +1,6 @@
 """The closed ingestion loop: a live OAI-PMH HTTP endpoint (this engine's
 own serving tier over the fixture corpus) is polled with resumption-token
-follow-up, the landed events stream through the watermarked ingest merge,
+follow-up, the landed events stream through the ingest merge,
 and the merged corpus serves ListRecords with the harvested records — the
 reference ecosystem's harvester → DocStore → serve cycle in one test."""
 

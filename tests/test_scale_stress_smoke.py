@@ -6,8 +6,9 @@ via `python tools/scale_stress.py` (SCALING.md "Stress evidence")."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators import dedup
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.tables import (

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import urllib.request
 import xml.etree.ElementTree as ET
+from pathlib import Path
 
 import pytest
 
@@ -11,7 +12,7 @@ from cessda_cdc_aggregator_oai_pmh_repo_handler_spark import serve
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import fixture_studies
 
 NS = {"oai": "http://www.openarchives.org/OAI/2.0/"}
-DATA = "/root/repo/tests/data"
+DATA = str(Path(__file__).resolve().parent / "data")
 
 
 def test_build_app_and_serve(spark, tmp_path):

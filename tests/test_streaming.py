@@ -1053,9 +1053,10 @@ def _assert_view_matches_corpus(spark, tmp_path, table):
 
 
 def test_versioned_ingest_no_data_batch_publishes_nothing(spark, tmp_path):
-    """Each availableNow run ends with the watermark's no-data microbatch:
-    it must not publish a version, a rerun with nothing landed publishes
-    none, and a restart that re-runs the no-data epoch applies nothing."""
+    """The stateless harvest stream runs one trigger per availableNow run
+    and no no-data microbatch; a rerun with nothing landed publishes no
+    version, and a restart that re-runs the applied data epoch applies
+    nothing."""
     from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import (
         versioned_table as VT,
     )
@@ -1064,7 +1065,7 @@ def test_versioned_ingest_no_data_batch_publishes_nothing(spark, tmp_path):
     recs = fixture_records()
     land([_event(r, "upsert", "2020-01-01T00:00:00Z") for r in recs[:5]])
     progress = run()
-    assert [p["numInputRows"] for p in progress] == [5, 0]  # data, no-data
+    assert [p["numInputRows"] for p in progress] == [5]  # one trigger
     assert VT.versions(table) == [0, 1]  # empty create + ONE merge
     assert VT.read_manifest(table, 1)["epoch"] == progress[0]["batchId"]
     model = {r["aggregator_identifier"]: (r["study_number"], "created")
@@ -1074,11 +1075,11 @@ def test_versioned_ingest_no_data_batch_publishes_nothing(spark, tmp_path):
     run()  # nothing new landed
     assert VT.versions(table) == [0, 1]
 
-    # crash after the no-data epoch's sink ran, before its commit: the
-    # restart re-runs that epoch, which still applies nothing
+    # crash after the data epoch's sink ran, before its commit: the
+    # restart re-runs that epoch, which the manifest already records
     commits = tmp_path / "ckpt" / "commits"
-    no_data = progress[-1]["batchId"]
-    for name in (str(no_data), f".{no_data}.crc"):
+    data = progress[-1]["batchId"]
+    for name in (str(data), f".{data}.crc"):
         os.remove(str(commits / name))
     run()
     assert VT.versions(table) == [0, 1]
@@ -1127,3 +1128,170 @@ def test_merge_batch_versioned_empty_batch_fresh_epoch_is_noop(spark,
     I.merge_batch_versioned(_events_df(spark, []), table, epoch_id=7)
     assert snapshot() == before
     assert not VT.epoch_committed(table, 7)
+
+
+# --- newer harvest wins: dedup is a property of the merge, not the stream --
+
+SINKS = ("versioned", "bucketed")
+
+
+def _sink_rows(spark, sink, path):
+    """{key: (study_number, status, updated)} of either sink's corpus."""
+    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import (
+        versioned_table as VT,
+    )
+
+    df = (VT.read(spark, path) if sink == "versioned"
+          else I.read_bucketed_corpus(spark, path))
+    rows = df.select("aggregator_identifier", "study_number",
+                     "metadata.status", "metadata.updated").collect()
+    assert len(rows) == len({r[0] for r in rows})  # one row per key
+    return {r[0]: (r[1], r[2], r[3]) for r in rows}
+
+
+def _sink_stream(spark, tmp_path, sink):
+    """(land, run, corpus): each ``run`` is one availableNow pass of the
+    sink's stream builder over one landing dir and checkpoint."""
+    src = str(tmp_path / "incoming")
+    corpus = str(tmp_path / "corpus")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src, exist_ok=True)
+
+    def land(events):
+        _events_df(spark, events).coalesce(1).write.mode("append").parquet(src)
+
+    def run():
+        q = (I.start_ingest_versioned(spark, src, corpus, ckpt)
+             if sink == "versioned" else I.start_ingest(spark, src, corpus, ckpt))
+        q.awaitTermination(120)
+
+    return land, run, corpus
+
+
+@pytest.mark.parametrize("sink", SINKS)
+def test_ingest_older_upsert_in_later_run_leaves_newer_record(spark, tmp_path,
+                                                              sink):
+    """An older upsert for an existing key, landing in a later run and
+    still inside the old 1 h dedup watermark, changes nothing: the newer
+    record stays (a stream-side dedup let it through and the merge
+    overwrote the record with the older version)."""
+    land, run, corpus = _sink_stream(spark, tmp_path, sink)
+    recs = fixture_records()
+    land([_event(dict(recs[0], study_number="v2"), "upsert",
+                 "2020-01-01T12:00:00Z"),
+          _event(recs[1], "upsert", "2020-01-01T12:00:00Z")])
+    run()
+    before = _sink_rows(spark, sink, corpus)
+    assert before[recs[0]["aggregator_identifier"]][0] == "v2"
+
+    land([_event(dict(recs[0], study_number="v1"), "upsert",
+                 "2020-01-01T11:30:00Z")])
+    run()
+    assert _sink_rows(spark, sink, corpus) == before
+
+
+@pytest.mark.parametrize("sink", SINKS)
+def test_ingest_late_new_key_in_later_run_is_ingested(spark, tmp_path, sink):
+    """A new-key event older than the old 1 h watermark, landing in a
+    later run, is ingested (a watermarked stream dropped it as late)."""
+    land, run, corpus = _sink_stream(spark, tmp_path, sink)
+    recs = fixture_records()
+    land([_event(recs[0], "upsert", "2020-01-01T12:00:00Z")])
+    run()
+    land([_event(recs[1], "upsert", "2020-01-01T09:00:00Z")])
+    run()
+    got = _sink_rows(spark, sink, corpus)
+    assert got[recs[1]["aggregator_identifier"]] == (
+        recs[1]["study_number"], "created", datetime.datetime(2020, 1, 1, 9))
+    assert set(got) == {recs[0]["aggregator_identifier"],
+                        recs[1]["aggregator_identifier"]}
+
+
+@pytest.mark.parametrize("sink", SINKS)
+def test_merge_redelivered_event_in_later_epoch_changes_nothing(spark,
+                                                                tmp_path,
+                                                                sink):
+    """A redelivered identical event reaching the sink in a later epoch
+    leaves ``metadata.updated`` unchanged; on the versioned table it also
+    rewrites no file and adds no CDC rows for the key."""
+    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import (
+        versioned_table as VT,
+    )
+
+    corpus = str(tmp_path / "corpus")
+    if sink == "versioned":
+        VT.create(spark.createDataFrame([], studies_schema()), corpus)
+    merge = (I.merge_batch_versioned if sink == "versioned"
+             else I.merge_batch_bucketed)
+    recs = fixture_records()
+    key = recs[0]["aggregator_identifier"]
+    e1 = _event(dict(recs[0], study_number="v1"), "upsert",
+                "2020-01-01T10:00:00Z")
+    e2 = _event(dict(recs[0], study_number="v2"), "upsert",
+                "2020-01-01T10:30:00Z")
+    merge(_events_df(spark, [e1, _event(recs[1], "upsert",
+                                        "2020-01-01T10:00:00Z")]),
+          corpus, epoch_id=0)
+    merge(_events_df(spark, [e2]), corpus, epoch_id=1)
+    want = _sink_rows(spark, sink, corpus)
+    assert want[key] == ("v2", "created", datetime.datetime(2020, 1, 1, 10, 30))
+
+    for epoch, ev in ((2, e1), (3, e2)):  # the older one, then the current
+        head = VT.current_version(corpus) if sink == "versioned" else None
+        merge(_events_df(spark, [ev]), corpus, epoch_id=epoch)
+        assert _sink_rows(spark, sink, corpus) == want
+        if sink == "versioned":
+            new = VT.current_version(corpus)
+            assert (VT.read_manifest(corpus, new)["files"]
+                    == VT.read_manifest(corpus, head)["files"])
+            changes = VT.table_changes(spark, corpus, head, new)
+            assert changes.filter(F.col("aggregator_identifier") == key).count() == 0
+            assert VT.epoch_committed(corpus, epoch)
+
+
+def test_versioned_ingest_restarts_from_stateful_dedup_checkpoint(spark,
+                                                                  tmp_path):
+    """A checkpoint written by the earlier stateful query (watermark +
+    dropDuplicates in front of the same sink) restarts under the stateless
+    plan: the restart re-applies no landed file, and the next batch
+    applies exactly once."""
+    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import (
+        versioned_table as VT,
+    )
+
+    land, run, table = _versioned_ingest(spark, tmp_path)
+    src, ckpt = str(tmp_path / "incoming"), tmp_path / "ckpt"
+    VT.create(spark.createDataFrame([], studies_schema()), table)
+    recs = fixture_records()
+    land([_event(r, "upsert", "2020-01-01T00:00:00Z") for r in recs[:4]])
+    old = (spark.readStream.schema(I.harvest_event_schema())
+           .option("maxFilesPerTrigger", 16).parquet(src)
+           .withWatermark("harvest_ts", "1 hour")
+           .dropDuplicates(["aggregator_identifier", "harvest_ts"])
+           .writeStream.foreachBatch(
+               lambda df, epoch: I.merge_batch_versioned(
+                   df, table, epoch_id=int(epoch)))
+           .option("checkpointLocation", str(ckpt))
+           .outputMode("update").trigger(availableNow=True).start())
+    old.awaitTermination(120)
+    assert VT.versions(table) == [0, 1]
+    assert (ckpt / "state").is_dir()
+    model = {r["aggregator_identifier"]: (r["study_number"], "created")
+             for r in recs[:4]}
+
+    # restart: nothing new landed, so no landed file is re-read
+    assert all(p["numInputRows"] == 0 for p in run())
+    assert not (ckpt / "state").exists()
+    assert VT.versions(table) == [0, 1]
+    assert _corpus_state(spark, table) == model
+
+    land([_event(dict(recs[1], study_number="revised"), "upsert",
+                 "2020-02-01T00:00:00Z"),
+          _event(recs[4], "upsert", "2020-02-01T00:00:00Z")])
+    progress = run()
+    assert [p["numInputRows"] for p in progress] == [2]
+    assert VT.versions(table) == [0, 1, 2]
+    model[recs[1]["aggregator_identifier"]] = ("revised", "created")
+    model[recs[4]["aggregator_identifier"]] = (
+        recs[4]["study_number"], "created")
+    assert _corpus_state(spark, table) == model
